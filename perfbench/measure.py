@@ -55,7 +55,8 @@ class Tracer:
             rec.update(listing_diff(before, store_listing(self.store_root)))
 
     def materialise(self, batch, df, count_name: str):
-        df = batch.keep(df.persist())
+        if not df.is_cached:
+            df = batch.keep(df.persist())
         batch.counts[count_name] = df.count()
         return df
 

@@ -18,19 +18,19 @@ its own span instead of in whichever later action first pulls it.
 from __future__ import annotations
 
 import os
+import time
 
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from crawler_spark.operators.bloom import bloom_prefilter
-from crawler_spark.operators.cuckoo import cuckoo_prefilter
 from crawler_spark.operators.politeness import broadcast_robots, host_quotas, robots_filter
 from crawler_spark.operators.scheduler import drain_ordered, fetch_parse_digest, schedule_batch
 from crawler_spark.operators.seen_state import SeenState
 from crawler_spark.session import get_spark
 
 import pages
-from workloads import DEFAULT_K, SALT_SPAN, Workload
+from workloads import DEFAULT_K, SALT_SPAN, Workload, compacts
 
 N_PARTS = 4  # prefilter partitions
 BUCKETS = 16  # url_seen hash buckets (a multiple of N_PARTS)
@@ -41,13 +41,11 @@ def start_session(cores: int, work_dir: str, trace: bool):
     The traced run turns the UI on: its REST API is where per-stage
     shuffle bytes come from."""
     conf = {
-        # the whole heap is touched at start, so the JVM's share of
-        # peak_rss_mb does not depend on when the collector grew the heap;
-        # -XX:-UsePerfData keeps the JVM's perf file out of /tmp
+        # a 1 GB heap cap instead of the product's 8 GB default keeps the
+        # run small on a shared host; -XX:-UsePerfData keeps the JVM's
+        # perf file out of /tmp
         "spark.driver.memory": "1g",
-        "spark.driver.extraJavaOptions": (
-            f"-Xms1g -XX:+AlwaysPreTouch -XX:-UsePerfData -Djava.io.tmpdir={work_dir}"
-        ),
+        "spark.driver.extraJavaOptions": f"-XX:-UsePerfData -Djava.io.tmpdir={work_dir}",
         "spark.local.dir": os.path.join(work_dir, "spark-local"),
         "spark.sql.warehouse.dir": os.path.join(work_dir, "warehouse"),
         "spark.ui.showConsoleProgress": "false",
@@ -102,15 +100,13 @@ class Drain:
         spark, st, w = self.spark, self.st, self.w
         b = Batch()
         with t.span("frontier.read"):
-            frontier = b.keep(spark.read.parquet(frontier_path).persist())
-            b.counts["frontier.rows"] = frontier.count()
+            frontier = t.materialise(b, spark.read.parquet(frontier_path), "frontier.rows")
         with t.span("politeness"):
             allowed = robots_filter(frontier, self.robots, host_col="host")
             allowed = t.materialise(b, allowed, "politeness.rows_out")
         with t.span("prefilter"):
-            probe = cuckoo_prefilter if st.filter_kind == "cuckoo" else bloom_prefilter
-            tagged = b.keep(probe(allowed, st.blobs(), n_parts=N_PARTS).persist())
-            tagged.count()
+            tagged = b.keep(bloom_prefilter(allowed, st.blobs(), n_parts=N_PARTS).persist())
+            tagged = t.materialise(b, tagged, "prefilter.tagged_rows")
             maybe = tagged.filter(F.col("maybe_seen")).drop("maybe_seen")
             definitely_new = tagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
             maybe = t.materialise(b, maybe, "prefilter.maybe_rows")
@@ -137,10 +133,11 @@ class Drain:
         with t.span("commit"):
             st.commit_batch(b.drained.select("url"), batch_id=i + 1)
             b.counts["commit.rows"] = b.counts["scheduled"]
+        b.committed_at = time.perf_counter()
         if delete_path is not None:
             with t.span("delete"):
                 st.delete_urls(spark.read.parquet(delete_path))
-        if w.compacts(i):
+        if compacts(i):
             if delete_path is not None:
                 with t.span("apply_deletes"):
                     st.apply_deletes()
@@ -169,6 +166,7 @@ class Batch:
         self.cached: list = []
         self.counts: dict[str, int] = {}
         self.drained = None
+        self.committed_at: float | None = None  # perf_counter when commit_batch returned
         self.parse: dict[str, int] | None = None
         self.digest: dict | None = None
 

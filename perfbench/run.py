@@ -99,14 +99,14 @@ class Run:
         lanes run batch i in turn, so an untraced and a traced lane see
         the same warm-up. Checks run outside the timed window."""
         outs = [
-            {"batch_s": [], "rows": 0, "committed": 0, "write_bytes": 0,
+            {"batch_s": [], "wall_s": [], "rows": 0, "committed": 0, "write_bytes": 0,
              "attempted": 0, "failed": 0, "errors": [], "digests": [], "counts": {},
              "rescheduled_deleted": 0, "rebuilds": 0, "batches": 0, "last": 0,
              "snap": max((s for s, _ in drain.history_events()), default=0)}
             for drain, _ in lanes
         ]
         i = 1
-        while i < MAX_BATCHES and not self.done(i, sum(outs[0]["batch_s"])):
+        while i < MAX_BATCHES and not self.done(i, sum(outs[0]["wall_s"])):
             for (drain, tracer), out in zip(lanes, outs):
                 if not self.run_batch(i, drain, tracer, out):
                     return outs
@@ -129,14 +129,15 @@ class Run:
             out["failed"] += 1
             out["errors"].append(f"batch {i} raised:\n{traceback.format_exc()}")
             return False
-        out["batch_s"].append(time.perf_counter() - t0)
+        out["wall_s"].append(time.perf_counter() - t0)
+        out["batch_s"].append(b.committed_at - t0)
         out["write_bytes"] += listing_diff(before, store_listing(drain.store_root))["bytes_written"]
         errs = self.check_batch(i, b)
         b.release()
         if errs:
             out["failed"] += 1
             out["errors"] += errs
-        out["rows"] += b.counts["frontier.rows"]
+        out["rows"] += self.expected[i]["rows"]
         out["committed"] += b.counts["scheduled"]
         out["rescheduled_deleted"] += len(self.expected[i]["rescheduled_deleted"])
         out["digests"].append(b.digest)
@@ -153,7 +154,9 @@ class Run:
     def done(self, i: int, timed_s: float) -> bool:
         """Stop before batch ``i`` once ``--seconds`` are used and batch
         i-1 compacted, so every run ends on the same batch mix."""
-        return timed_s >= self.args.seconds and self.w.compacts(i - 1)
+        from workloads import compacts
+
+        return timed_s >= self.args.seconds and compacts(i - 1)
 
     def check_run(self, drain, res: dict) -> list[str]:
         """Run-level mismatches: the final seen set's size, and on
@@ -216,7 +219,7 @@ def run_untraced(run: Run) -> tuple[dict, list[str], int, int]:
     finally:
         program.shutdown(spark)
     n = res["batches"]
-    wall = sum(res["batch_s"])
+    wall = sum(res["wall_s"])
     ok = res["attempted"] - res["failed"]
     metrics = {
         "setup_s": metric(setup_s, "s"),
@@ -350,8 +353,8 @@ def run_traced(run: Run) -> tuple[dict, list[str], int, int]:
     n = traced["batches"]
     if not n or plain["batches"] != n:
         raise RuntimeError("traced run incomplete: " + "; ".join(errs))
-    plain_ups = plain["rows"] / sum(plain["batch_s"])
-    traced_ups = traced["rows"] / sum(traced["batch_s"])
+    plain_ups = plain["rows"] / sum(plain["wall_s"])
+    traced_ups = traced["rows"] / sum(traced["wall_s"])
     per_run = {
         "prefilter.false_maybe_ratio": confirmed / maybe if maybe else 0.0,
         "parse.docs_per_s": tot["parse.docs"] / tot["parse.s"] if tot["parse.s"] else 0.0,

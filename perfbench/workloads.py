@@ -34,46 +34,47 @@ BATCH_WINDOW_MS = 60_000
 DEFAULT_K = 200
 SALT_SPAN = 50
 CRAWL_DELAYS_MS = [0, 500, 1000]  # quotas DEFAULT_K, 120, 60
+HOSTS = 2_000  # Zipf-distributed, plus the mega host 0
+MEGA_SHARE = 0.10  # share of new rows on host 0
+ROBOTS_HOSTS = 200  # hosts 1..ROBOTS_HOSTS carry robots rules
+COMPACT_EVERY = 4
+
+
+def compacts(i: int) -> bool:
+    """Compaction (with apply_deletes) runs every ``COMPACT_EVERY``-th
+    batch, at batches 2, 6, 10, ...: after the warm-up batch 0, the
+    second timed batch is a compaction batch."""
+    return (i + 2) % COMPACT_EVERY == 0
 
 
 @dataclass(frozen=True)
 class Workload:
     name: str
     rows: int  # frontier rows per batch
-    hosts: int
-    mega_share: float  # share of new rows on host 0
-    robots_hosts: int  # hosts 1..robots_hosts carry robots rules
     disallowed_share: float  # share of new rows on a disallowed-looking path
     rediscover: float  # share of rows re-discovering URLs committed earlier
     distance: int  # ... in the last `distance` batches
     delete_slices: int  # 0: no deletes; else batch i deletes hosts with id % slices == i % slices
     redeleted: float  # share of rows re-discovering URLs deleted in the last `distance` batches
     parse: bool
-    compact_every: int
     capacity: int  # SeenState expected_keys; undersized ones rebuild mid-run
-
-    def compacts(self, i: int) -> bool:
-        """Compaction (with apply_deletes) runs every ``compact_every``-th
-        batch, at batches 2, 6, 10, ...: after the warm-up batch 0, the
-        second timed batch is already a compaction batch."""
-        return (i + 2) % self.compact_every == 0
 
 
 WORKLOADS = {
     w.name: w
     for w in (
-        Workload("fresh_parse", rows=6_000, hosts=2_000, mega_share=0.10,
-                 robots_hosts=200, disallowed_share=0.10, rediscover=0.03,
+        Workload("fresh_parse", rows=6_000,
+                 disallowed_share=0.10, rediscover=0.03,
                  distance=4, delete_slices=0, redeleted=0.0, parse=True,
-                 compact_every=4, capacity=400_000),
-        Workload("recrawl_dedup", rows=30_000, hosts=2_000, mega_share=0.10,
-                 robots_hosts=200, disallowed_share=0.05, rediscover=0.50,
+                 capacity=400_000),
+        Workload("recrawl_dedup", rows=30_000,
+                 disallowed_share=0.05, rediscover=0.50,
                  distance=8, delete_slices=0, redeleted=0.0, parse=False,
-                 compact_every=4, capacity=8_000),
-        Workload("delete_churn", rows=30_000, hosts=2_000, mega_share=0.10,
-                 robots_hosts=200, disallowed_share=0.05, rediscover=0.40,
+                 capacity=8_000),
+        Workload("delete_churn", rows=30_000,
+                 disallowed_share=0.05, rediscover=0.40,
                  distance=8, delete_slices=16, redeleted=0.10, parse=False,
-                 compact_every=4, capacity=8_000),
+                 capacity=8_000),
     )
 }
 
@@ -82,13 +83,13 @@ def host_name(i) -> str:
     return f"h{i}.bench.test"
 
 
-def robots_rows(w: Workload) -> list[tuple[str, list[str], int]]:
+def robots_rows() -> list[tuple[str, list[str], int]]:
     # fixed per host, not drawn from the seed: the largest Zipf hosts
     # carry rules, and a seed-drawn delay on them would swing the
     # scheduled count from seed to seed
     return [
         (host_name(h), list(DISALLOW), CRAWL_DELAYS_MS[h % len(CRAWL_DELAYS_MS)])
-        for h in range(1, w.robots_hosts + 1)
+        for h in range(1, ROBOTS_HOSTS + 1)
     ]
 
 
@@ -158,11 +159,11 @@ def _path(url: str) -> str:
     return url[url.index("/", 8) :]
 
 
-def _zipf_hosts(w: Workload, rng: np.random.Generator, n: int) -> np.ndarray:
-    ranks = np.arange(1, w.hosts)
+def _zipf_hosts(rng: np.random.Generator, n: int) -> np.ndarray:
+    ranks = np.arange(1, HOSTS)
     p = 1.0 / ranks
     hosts = rng.choice(ranks, size=n, p=p / p.sum())
-    hosts[rng.random(n) < w.mega_share] = 0
+    hosts[rng.random(n) < MEGA_SHARE] = 0
     return hosts
 
 
@@ -171,7 +172,7 @@ def generate(w: Workload, seed: int, n_batches: int, out_dir: str) -> tuple[list
     (robots rows, per-batch expectations). Batch files are
     ``frontier_<i>.parquet``; delete files ``delete_<i>.parquet``."""
     rng = np.random.default_rng(seed)
-    robots = robots_rows(w)
+    robots = robots_rows()
     model = Model(robots)
     os.makedirs(out_dir, exist_ok=True)
     committed: list[np.ndarray] = []
@@ -190,7 +191,7 @@ def generate(w: Workload, seed: int, n_batches: int, out_dir: str) -> tuple[list
             pool = pool[np.array([u in model.seen for u in pool], dtype=bool)]
             reuse += list(rng.choice(pool, size=min(n_re, len(pool)), replace=False))
         n_new = w.rows - len(reuse)
-        hosts = _zipf_hosts(w, rng, n_new)
+        hosts = _zipf_hosts(rng, n_new)
         sections = np.where(
             rng.random(n_new) < w.disallowed_share,
             rng.choice(DISALLOWED_SECTIONS, size=n_new),
@@ -217,6 +218,7 @@ def generate(w: Workload, seed: int, n_batches: int, out_dir: str) -> tuple[list
 
         sched = model.schedule(batch)
         exp = {
+            "rows": len(batch),
             "rescheduled_deleted": [u for u in sched["url"] if u in model.deleted],
             **digest(sched["url"], sched["salt"], sched["fetch_order"]),
         }
@@ -229,7 +231,7 @@ def generate(w: Workload, seed: int, n_batches: int, out_dir: str) -> tuple[list
         committed.append(sched["url"].to_numpy(dtype=object))
         if w.delete_slices:
             gone = model.delete_hosts(
-                [host_name(h) for h in range(i % w.delete_slices, w.hosts, w.delete_slices)]
+                [host_name(h) for h in range(i % w.delete_slices, HOSTS, w.delete_slices)]
             )
             pq.write_table(
                 pa.table({"url": pa.array(gone, pa.string())}),
